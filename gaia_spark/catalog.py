@@ -1,4 +1,4 @@
-"""Checkpoint catalog: replace-by-run_id tables, per-partition lineage,
+"""Checkpoint catalog: replace-by-run_id tables, per-file lineage,
 stage-hash resume (north_rule: "resumable from checkpoint with
 per-partition lineage + metrics").
 
@@ -14,9 +14,11 @@ The reference's resume model is "success = output file exists"
   config, code version); ``has()`` lets the pipeline SKIP stages whose
   inputs didn't change (kill → re-run resumes after the last completed
   stage).
-- lineage rows are per OUTPUT partition: (stage, run_id, part_id,
-  url_min, url_max, out_rows, ts) — the url range + counts demanded by
-  the north_star, computed with one groupBy(spark_partition_id()).
+- lineage rows are per OUTPUT FILE: (stage, run_id, part_id, file,
+  key_min, key_max, out_rows, ts) — the url range + counts demanded by
+  the north_star, read from the written files' parquet footers
+  (row count + min/max statistics), so a stage costs one Spark write
+  and no read-back job.
 
 On a real cluster this module is the seam where Iceberg slots in, and
 the seam is now LIVE code, not a comment: when an iceberg-spark-runtime
@@ -37,7 +39,9 @@ import hashlib
 import json
 import os
 import shutil
+import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -98,8 +102,54 @@ def input_fingerprint(path: str) -> str:
         names = [path]
     for n in names:
         st = os.stat(n)
-        h.update(f"{n}|{st.st_size}|{int(st.st_mtime)}".encode())
+        h.update(f"{n}|{st.st_size}|{st.st_mtime_ns}".encode())
     return h.hexdigest()
+
+
+def _footer_lineage(path: str, key: str | None) -> list[dict]:
+    """One lineage row per parquet file under ``path``: its row count
+    and the min/max of column ``key``, all read from the file footer
+    (no Spark job).  ``part_id`` numbers the files in path order;
+    key bounds are None when the column is absent from the files (a
+    partition column) or a row group carries no statistics for it."""
+    files = sorted(
+        os.path.relpath(os.path.join(r, f), path)
+        for r, _d, fs in os.walk(path) for f in fs
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+    rows = []
+    for i, rel in enumerate(files):
+        md = pq.read_metadata(os.path.join(path, rel))
+        cols = [j for j in range(md.num_columns)
+                if md.schema.column(j).path == key]
+        stats = [md.row_group(g).column(cols[0]).statistics
+                 for g in range(md.num_row_groups)] if cols else []
+        # an all-null row group (no non-null values) needs no bounds
+        stats = [st for st in stats if st is None or st.num_values]
+        lo = hi = None
+        if stats and all(st is not None and st.has_min_max
+                         for st in stats):
+            lo = min(st.min for st in stats)
+            hi = max(st.max for st in stats)
+        rows.append({"part_id": i, "file": rel, "key_min": lo,
+                     "key_max": hi, "out_rows": md.num_rows})
+    return rows
+
+
+def _manifest(name: str, shash: str, run_id: str, lineage: list[dict],
+              t0: float, metrics: dict | None, **extra) -> dict:
+    return {
+        "table": name, "run_id": run_id, "stage_hash": shash, **extra,
+        "rows": sum(r["out_rows"] for r in lineage),
+        "n_partitions": len(lineage),
+        "created": dt.datetime.now(dt.timezone.utc).isoformat(),
+        "metrics": {
+            "elapsed_sec": round(time.perf_counter() - t0, 3),
+            **(metrics or {}),
+        },
+        "lineage": [{"stage": name, "run_id": run_id, **r}
+                    for r in lineage],
+    }
 
 
 class Catalog:
@@ -147,70 +197,52 @@ class Catalog:
         partition_by: list[str] | None = None,
         lineage_key: str = "url",
         metrics: dict | None = None,
+        started: float | None = None,
     ) -> dict:
-        """Atomic replace-by-run_id write + per-partition lineage rows.
+        """Atomic replace-by-run_id write + per-output-file lineage rows.
 
         The manifest's ``metrics`` block records the stage's wall time
-        (write + lineage aggregation, measured here — the action runs
-        inside this call) merged with any caller-provided counters:
-        the north_rule's per-stage metrics record.
+        since ``started`` (a ``time.perf_counter()`` reading; default:
+        entry to this call) merged with any caller-provided counters:
+        the north_rule's per-stage metrics record.  A caller whose
+        ``df`` was built eagerly passes the time it started building,
+        so the record covers that work too.
         """
-        import time
-        t0 = time.perf_counter()
-        tdir = self._tdir(name)
-        os.makedirs(tdir, exist_ok=True)
-        final = os.path.join(tdir, f"data_{run_id}")
-        tmp = os.path.join(tdir, f"_tmp_{run_id}")
+        t0 = time.perf_counter() if started is None else started
+        tmp = os.path.join(self._tdir(name), f"_tmp_{run_id}")
         if os.path.exists(tmp):
             shutil.rmtree(tmp)
 
-        spark = df.sparkSession
-        if iceberg_available(spark):
+        if iceberg_available(df.sparkSession):
             return self._write_iceberg(
                 df, name, shash, run_id, partition_by, lineage_key,
-                metrics, t0)
+                metrics, t0, tmp)
 
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(tmp)
+        lineage = _footer_lineage(tmp, lineage_key)
+        return self._commit(
+            tmp, _manifest(name, shash, run_id, lineage, t0, metrics))
 
-        out = spark.read.parquet(tmp)
-        key = lineage_key if lineage_key in out.columns else None
-        agg = [F.count(F.lit(1)).alias("out_rows")]
-        if key:
-            agg += [F.min(key).alias("key_min"), F.max(key).alias("key_max")]
-        else:
-            agg += [F.lit(None).cast("string").alias("key_min"),
-                    F.lit(None).cast("string").alias("key_max")]
-        lineage_rows = [
-            {"stage": name, "run_id": run_id, "part_id": r["part_id"],
-             "key_min": r["key_min"], "key_max": r["key_max"],
-             "out_rows": r["out_rows"]}
-            for r in out.groupBy(
-                F.spark_partition_id().alias("part_id")).agg(*agg).collect()
-        ]
-        total = sum(r["out_rows"] for r in lineage_rows)
-        manifest = {
-            "table": name, "run_id": run_id, "stage_hash": shash,
-            "rows": total, "n_partitions": len(lineage_rows),
-            "created": dt.datetime.now(dt.timezone.utc).isoformat(),
-            "metrics": {
-                "elapsed_sec": round(time.perf_counter() - t0, 3),
-                **(metrics or {}),
-            },
-            "lineage": lineage_rows,
-        }
-        with open(os.path.join(tmp, "_MANIFEST.json"), "w") as f:
+    def _commit(self, staged: str, manifest: dict) -> dict:
+        """Publish ``staged`` as the table's current generation: write
+        the manifest into it, rename it to ``data_<run_id>``, swap the
+        ``_CURRENT`` pointer (both os.replace, so atomic), then drop
+        superseded generations."""
+        name, run_id = manifest["table"], manifest["run_id"]
+        tdir = self._tdir(name)
+        with open(os.path.join(staged, "_MANIFEST.json"), "w") as f:
             json.dump(manifest, f)
+        final = os.path.join(tdir, f"data_{run_id}")
         if os.path.exists(final):
             shutil.rmtree(final)
-        os.replace(tmp, final)
+        os.replace(staged, final)
         ptr_tmp = self._pointer(name) + f".{run_id}"
         with open(ptr_tmp, "w") as f:
             f.write(run_id)
         os.replace(ptr_tmp, self._pointer(name))
-        # drop superseded data dirs (keep current only)
         for d in os.listdir(tdir):
             if d.startswith("data_") and d != f"data_{run_id}":
                 shutil.rmtree(os.path.join(tdir, d), ignore_errors=True)
@@ -222,17 +254,15 @@ class Catalog:
         return f"{ICEBERG_CATALOG}.{ns}.{name}"
 
     def _write_iceberg(self, df, name, shash, run_id, partition_by,
-                       lineage_key, metrics, t0):
+                       lineage_key, metrics, t0, staged):
         """Native Iceberg write: atomic replace + snapshots come from
         the table format itself (`writeTo(...).createOrReplace()`),
         spec = (*partition_by, bucket(16, lineage_key)) — the
         (lang, bucket(url)) layout the north_rule's input hint implies.
         The file-based manifest/pointer still records stage_hash +
-        per-partition lineage so `has()`/resume semantics are IDENTICAL
+        lineage (here per Spark partition of a table scan) so `has()`/resume semantics are IDENTICAL
         across both storage backends."""
-        import time
         tbl = self._ice_table(name)
-        spark = df.sparkSession
         w = df.writeTo(tbl).using("iceberg")
         spec = [F.col(c) for c in (partition_by or [])]
         if lineage_key and lineage_key in df.columns:
@@ -241,7 +271,7 @@ class Catalog:
             w = w.partitionedBy(spec[0], *spec[1:])
         w.createOrReplace()
 
-        out = spark.table(tbl)
+        out = df.sparkSession.table(tbl)
         key = lineage_key if lineage_key in out.columns else None
         agg = [F.count(F.lit(1)).alias("out_rows")]
         if key:
@@ -249,34 +279,16 @@ class Catalog:
         else:
             agg += [F.lit(None).cast("string").alias("key_min"),
                     F.lit(None).cast("string").alias("key_max")]
-        lineage_rows = [
-            {"stage": name, "run_id": run_id, "part_id": r["part_id"],
-             "key_min": r["key_min"], "key_max": r["key_max"],
-             "out_rows": r["out_rows"]}
+        lineage = [
+            {"part_id": r["part_id"], "key_min": r["key_min"],
+             "key_max": r["key_max"], "out_rows": r["out_rows"]}
             for r in out.groupBy(
                 F.spark_partition_id().alias("part_id")).agg(*agg).collect()
         ]
-        manifest = {
-            "table": name, "run_id": run_id, "stage_hash": shash,
-            "storage": "iceberg", "iceberg_table": tbl,
-            "rows": sum(r["out_rows"] for r in lineage_rows),
-            "n_partitions": len(lineage_rows),
-            "created": dt.datetime.now(dt.timezone.utc).isoformat(),
-            "metrics": {
-                "elapsed_sec": round(time.perf_counter() - t0, 3),
-                **(metrics or {}),
-            },
-            "lineage": lineage_rows,
-        }
-        final = os.path.join(self._tdir(name), f"data_{run_id}")
-        os.makedirs(final, exist_ok=True)
-        with open(os.path.join(final, "_MANIFEST.json"), "w") as f:
-            json.dump(manifest, f)
-        ptr_tmp = self._pointer(name) + f".{run_id}"
-        with open(ptr_tmp, "w") as f:
-            f.write(run_id)
-        os.replace(ptr_tmp, self._pointer(name))
-        return manifest
+        os.makedirs(staged)
+        return self._commit(staged, _manifest(
+            name, shash, run_id, lineage, t0, metrics,
+            storage="iceberg", iceberg_table=tbl))
 
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         m = self.current_manifest(name)
@@ -323,7 +335,7 @@ class Catalog:
         return tbl
 
     def lineage(self, spark: SparkSession) -> DataFrame:
-        """All current tables' per-partition lineage as one DataFrame."""
+        """All current tables' per-file lineage as one DataFrame."""
         rows = []
         for name in sorted(os.listdir(self.root)):
             m = self.current_manifest(name)
@@ -364,9 +376,6 @@ class Catalog:
 
         → {table: [removed dir names]}, for the operator's log.
         """
-        import shutil
-        import time
-
         now = time.time()
         removed: dict[str, list[str]] = {}
         for name in sorted(os.listdir(self.root)):

@@ -2,16 +2,12 @@
 handled explicitly").
 
 AQE's skew-join splitting (enabled in session.py) covers skewed SHUFFLE
-partitions at join time, but two cases need explicit code
-(SURVEY.md §4.3.1):
-
-1. a Zipf-hot grouping key (the top domain is ~30% of the corpus in the
-   synthetic fixture, by design) — ``salted_repartition`` spreads a hot
-   key over S salt buckets so no single task owns 30% of the data;
-2. two-level aggregation over a hot key — ``salted_group_count``
-   aggregates (key, salt) partially, then merges per key: partial
-   map-side combine happens automatically, the salt bounds the final
-   reducer's key cardinality.
+partitions at join time; two-level aggregation over a Zipf-hot grouping
+key (the top domain is ~30% of the corpus in the synthetic fixture, by
+design) needs explicit code (SURVEY.md §4.3.1): ``salted_group_count``
+aggregates (key, salt) partially, then merges per key — partial
+map-side combine happens automatically, the salt bounds the final
+reducer's key cardinality.
 """
 
 from __future__ import annotations
@@ -29,15 +25,6 @@ def _row_salt(df: DataFrame, salt_buckets: int):
         F.xxhash64(*[F.col(c) for c in df.columns], F.lit(0x5417)),
         F.lit(salt_buckets),
     )
-
-
-def salted_repartition(
-    df: DataFrame, key: str, num_partitions: int, salt_buckets: int = 16
-) -> DataFrame:
-    """Repartition by (key, salt) — a hot key spreads over salt_buckets
-    tasks instead of one straggler (SURVEY.md §2.4 'repartition / salt')."""
-    return df.repartition(num_partitions, F.col(key),
-                          _row_salt(df, salt_buckets))
 
 
 def salted_group_count(

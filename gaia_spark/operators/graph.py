@@ -101,21 +101,23 @@ def connected_components(
     every downstream keeper election / cluster merge).  With pointer
     doubling the default 25 rounds covers diameters up to ~2^25.
     """
-    # materialize the symmetric edge table ONCE — without this the
-    # whole upstream edge pipeline (blocking + similarity UDFs) would
-    # re-execute inside every propagation round
     sym = (
         edges.select(F.col("src"), F.col("dst"))
         .unionByName(edges.select(F.col("dst").alias("src"),
                                   F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
-    n_edges = sym.count()
-    if n_edges <= DRIVER_CC_MAX_EDGES:
-        pairs = [(r.src, r.dst) for r in sym.collect()]
-        return _driver_components(pairs, edges.sparkSession, nodes,
+    # one bounded collect decides the branch AND feeds the driver
+    # union-find; the bound caps driver memory whatever the edge count
+    head = sym.limit(DRIVER_CC_MAX_EDGES + 1).collect()
+    if len(head) <= DRIVER_CC_MAX_EDGES:
+        return _driver_components([(r.src, r.dst) for r in head],
+                                  edges.sparkSession, nodes,
                                   node_type=sym.schema["src"].dataType)
+    # materialize the symmetric edge table ONCE — without this the
+    # whole upstream edge pipeline (blocking + similarity UDFs) would
+    # re-execute inside every propagation round
+    sym = sym.localCheckpoint()
 
     node_df = sym.select(F.col("src").alias("node")).distinct()
     if nodes is not None:
@@ -162,8 +164,8 @@ def connected_components(
     if not converged:
         raise RuntimeError(
             f"connected_components: not converged after {max_iter} "
-            f"rounds over {n_edges} edges — refusing to return a "
-            "partial (split-component) labeling; raise max_iter")
+            f"rounds over > {DRIVER_CC_MAX_EDGES} edges — refusing to "
+            "return a partial (split-component) labeling; raise max_iter")
     return labels
 
 

@@ -7,7 +7,9 @@ DataFrame→DataFrame operator, materialized to a catalog table with a
 stage hash, so a killed run resumes after its last completed stage and
 re-runs are idempotent replace-by-run_id writes (SURVEY.md §2.5/§3.1).
 
-Stage boundaries (each = one checkpoint table, per-partition lineage):
+Stage boundaries (each = one checkpoint table; per-output-file lineage
+read from the parquet footers, so materializing a stage costs one
+Spark write):
   pages_text   T1   (partitioned by lang → language filters prune;
                      the byte-identical ltf-analog artifact)
   tagged       T2/T3/T5/T7 + per-doc T6/T8/T9 — the fused flat pass
@@ -30,13 +32,13 @@ decomposition and per-operator test surface.
 from __future__ import annotations
 
 import os
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gaia_spark.catalog import Catalog, input_fingerprint, stage_hash
-from gaia_spark.functions.skew import salted_repartition
 from gaia_spark.operators.canonicalize import (
     canonical_map,
     canonical_triples,
@@ -59,6 +61,27 @@ from gaia_spark.operators.mentions import (
 )
 
 
+def _balance_pages(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """The page-balancing rule both KG paths apply before extraction.
+
+    The extractor/tagger wants ≥2 waves of tasks (page cost varies
+    ~20×, so at 1 partition per core the slowest task gates the
+    stage).  When the parquet scan already yields that many splits
+    (files.maxPartitionBytes is sized for it in session.py) the scan
+    splits feed the Arrow pass STRAIGHT — repartitioning first would
+    exchange the whole corpus (html included) for nothing: scan
+    splits are row-group-granular, so each page's rows stay
+    partition-local either way, which is the only property the
+    downstream dedup needs.  Unsplittable inputs (one small file, a
+    handful of createDataFrame partitions) are repartitioned by url,
+    which is unique per page, so no salt is needed to spread them.
+    """
+    nparts = 2 * spark.sparkContext.defaultParallelism
+    if pages.rdd.getNumPartitions() < nparts:
+        pages = pages.repartition(nparts, "url")
+    return pages
+
+
 def run_pipeline(
     spark: SparkSession,
     corpus_dir: str,
@@ -66,7 +89,6 @@ def run_pipeline(
     run_id: str | None = None,
     resume: bool = True,
     suppress_validation: bool = False,
-    salt_buckets: int = 16,
 ) -> dict:
     """Run (or resume) the full pipeline; returns {stage: manifest}."""
     run_id = run_id or uuid.uuid4().hex[:12]
@@ -85,21 +107,21 @@ def run_pipeline(
             results[name] = cat.current_manifest(name)
             results[name]["skipped"] = True
             return shash
+        # the stage timer covers build(): some stages (nil_ids) do
+        # their Spark work eagerly while building the DataFrame
+        t0 = time.perf_counter()
         df: DataFrame = build()
         results[name] = cat.write(
-            df, name, shash, run_id, partition_by=partition_by)
+            df, name, shash, run_id, partition_by=partition_by, started=t0)
         results[name]["skipped"] = False
         return shash
 
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # T1 — extract text; url-salted balance, lang partitions for pruning
+    # T1 — extract text; lang partitions for pruning
     h_text = stage_hash("pages_text", corpus_fp)
     step(
         "pages_text", h_text,
-        lambda: salted_repartition(
-            extract_pages(spark.read.parquet(pages_path)),
-            "url", nparts, salt_buckets),
+        lambda: extract_pages(
+            _balance_pages(spark, spark.read.parquet(pages_path))),
         partition_by=["lang"],
     )
 
@@ -189,13 +211,12 @@ def build_triples_df(
     returned DataFrame is garbage-collected.
 
     Same operators as run_pipeline, minus the parquet materialization
-    between stages.  Two scale guards that run_pipeline gets from its
-    catalog writes and must be explicit here:
+    between stages.  Two scale guards:
 
-    - the input is repartitioned to the session's parallelism before
-      the pandas-UDF extractor (a single parquet file would otherwise
-      pin T1/T2 to ONE task — files.maxPartitionBytes only splits big
-      files, not small ones);
+    - the input goes through the same page-balancing rule as
+      run_pipeline's T1 (``_balance_pages``: a single parquet file
+      would otherwise pin T1/T2 to ONE task — files.maxPartitionBytes
+      only splits big files, not small ones);
     - fan-in stages (tagged feeds T5/T6/T7; resolved feeds T4/T6/T8)
       are localCheckpoint-ed (materialize + TRUNCATE LINEAGE) so the
       expensive Python tagging runs once, not once per consumer — and,
@@ -217,21 +238,7 @@ def build_triples_df(
 
     from gaia_spark.checkpoint import big_local_checkpoint
 
-    # The tagger wants ≥2 waves of tasks (page cost varies ~20×, so at
-    # 1 partition per core the slowest task gates the stage).  When the
-    # parquet scan already yields that many splits (files.
-    # maxPartitionBytes is sized for it in session.py) feed the scan
-    # splits STRAIGHT into the Arrow pass — repartitioning first would
-    # exchange the whole corpus (html included) for nothing: scan
-    # splits are row-group-granular, so each page's flat rows stay
-    # partition-local either way, which is the only property the
-    # downstream dedup needs.  The repartition remains as the fallback
-    # for unsplittable inputs (one small file, a handful of
-    # createDataFrame partitions) that would otherwise pin T1/T2 to
-    # too few tasks.
-    nparts = 2 * spark.sparkContext.defaultParallelism
-    if pages.rdd.getNumPartitions() < nparts:
-        pages = pages.repartition(nparts, "url")
+    pages = _balance_pages(spark, pages)
     # fused T1+T2+T5: ONE wide stage (single Arrow pass
     # extract+tag+coref) emitting pre-exploded rows.
     # flat_mentions(tagged) IS the resolved table — downstream is pure

@@ -62,13 +62,14 @@ def streaming_exact_dedup(
     whitespace-canonicalized lowercase text), so a batch backfill and
     the streaming path agree on what is a duplicate.  One state row
     (a single boolean) per fingerprint; within a micro-batch the
-    smallest id wins (deterministic), across batches the earlier batch
-    wins.  At scale the shuffle key is the 32-byte fingerprint —
-    uniform, no skew handling needed.
+    smallest id wins, ties broken by the smallest tag (deterministic),
+    across batches the earlier batch wins.  At scale the shuffle key is
+    the 32-byte fingerprint — uniform, no skew handling needed.
 
     → append-mode stream of (fingerprint, doc_id) keeper rows.  With
     ``tag_col`` set, the winning row's tag value (bigint) passes
-    through as a third output column — feed it a per-file/batch
+    through as a third output column (a null tag stays null, and
+    sorts after every non-null tag) — feed it a per-file/batch
     marker and the output records WHICH micro-batch first saw each
     fingerprint, making cross-batch first-seen-wins observable in
     the sink itself (r4-verdict item #8).
@@ -84,6 +85,8 @@ def streaming_exact_dedup(
     fp = stream.select(*cols)
     out_schema = "fingerprint string, doc_id long" + (
         f", {tag_col} long" if tag_col is not None else "")
+    # the keeper is the first row in (doc_id, tag) order, nulls last
+    order = ["doc_id"] + (["tag"] if tag_col is not None else [])
 
     def emit_first(
         key: tuple,
@@ -92,22 +95,17 @@ def streaming_exact_dedup(
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
             return
-        best = None
-        best_tag = None
-        for pdf in pdfs:
-            if len(pdf):
-                i = int(pdf["doc_id"].idxmin())
-                m = int(pdf["doc_id"].loc[i])
-                if best is None or m < best:
-                    best = m
-                    if "tag" in pdf.columns:
-                        best_tag = int(pdf["tag"].loc[i])
-        if best is None:
+        chunks = [p for p in pdfs if len(p)]
+        if not chunks:
             return
         state.update((True,))
-        row = {"fingerprint": [key[0]], "doc_id": [best]}
+        # per column: a row Series would upcast doc_id to float
+        pdf = pd.concat(chunks).sort_values(order, na_position="last")
+        row = {"fingerprint": [key[0]],
+               "doc_id": [int(pdf["doc_id"].iloc[0])]}
         if tag_col is not None:
-            row[tag_col] = [best_tag]
+            tag = pdf["tag"].iloc[0]
+            row[tag_col] = [None if pd.isna(tag) else int(tag)]
         yield pd.DataFrame(row)
 
     return fp.groupBy("fingerprint").applyInPandasWithState(

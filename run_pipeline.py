@@ -10,7 +10,7 @@ conf comes from spark-submit (this script never sets master); locally it
 falls back to gaia_spark.session defaults (local[$SPARK_GRAFT_CPUS]).
 
 The job is the checkpointed T1→T13 pipeline (gaia_spark/plans/
-pipeline.py): each stage materializes with a stage hash + per-partition
+pipeline.py): each stage materializes with a stage hash + per-file
 lineage, so re-submitting after a failure resumes at the first stage
 whose inputs changed — idempotent replace-by-run_id writes mean a
 killed attempt never double-appends (north_rule resumability clause).
@@ -34,7 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--suppress-validation", action="store_true",
                    help="skip cleanKB checks (reference README.md:218)")
-    p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument("--export-cs", default=None,
                    help="also export Cold Start .cs lines to this dir")
     args = p.parse_args(argv)
@@ -53,7 +52,6 @@ def main(argv: list[str] | None = None) -> int:
         run_id=args.run_id,
         resume=not args.no_resume,
         suppress_validation=args.suppress_validation,
-        salt_buckets=args.salt_buckets,
     )
     if args.export_cs:
         from gaia_spark.sources.coldstart import write_cs

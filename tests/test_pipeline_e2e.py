@@ -93,7 +93,7 @@ def test_partitioning_invariance(spark, corpus_dir, tmp_path, oracle_result):
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "5")
-        run_pipeline(spark, corpus_dir, out, run_id="p5", salt_buckets=3)
+        run_pipeline(spark, corpus_dir, out, run_id="p5")
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert _triple_set(read_triples(spark, out).drop("lang")) == _oracle_set(

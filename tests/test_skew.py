@@ -1,9 +1,10 @@
-"""M4 skew hygiene: salting spreads a Zipf-hot key, counts stay exact."""
+"""M4 skew hygiene: a Zipf-hot key concentrates without a salt; salted
+counts stay exact."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from gaia_spark.functions.skew import salted_group_count, salted_repartition
+from gaia_spark.functions.skew import salted_group_count
 
 
 @pytest.fixture(scope="module")
@@ -14,23 +15,10 @@ def skewed_df(spark):
     return spark.createDataFrame(rows, "url string, parent_uid string")
 
 
-def test_salted_repartition_spreads_hot_key(spark, skewed_df):
-    parts = (
-        salted_repartition(skewed_df, "parent_uid", 16, salt_buckets=8)
-        .filter(F.col("parent_uid") == "hot.example")
-        .select(F.spark_partition_id().alias("pid"))
-        .groupBy("pid").count().collect()
-    )
-    # the hot key must land on >1 partition, and no partition may hold
-    # more than ~2x its fair share of the hot key's rows
-    assert len(parts) > 1
-    hot_total = sum(r["count"] for r in parts)
-    assert max(r["count"] for r in parts) <= 2 * hot_total / len(parts)
-
-
 def test_unsalted_repartition_concentrates(spark, skewed_df):
-    """Control: hash-repartition by key alone puts the hot key on ONE
-    partition — the straggler salting exists to prevent."""
+    """Control: hash-partitioning by key alone puts the hot key on ONE
+    partition — the straggler reducer salted_group_count's salt
+    spreads."""
     parts = (
         skewed_df.repartition(16, F.col("parent_uid"))
         .filter(F.col("parent_uid") == "hot.example")

@@ -275,3 +275,28 @@ def test_streaming_exact_dedup_tag_passthrough(spark, tmp_path):
     # "same text" keeper = 50 from batch 0 (1@batch1 suppressed
     # despite being smaller); uniques keep their own batch tag
     assert rows == {(50, 0), (60, 0), (70, 1)}
+
+
+def test_streaming_exact_dedup_tag_tie_break_and_null(spark, tmp_path):
+    """Equal doc_ids: the smallest tag wins whatever the row order,
+    and a null tag passes through as null (sorting after any tag)."""
+    from gaia_spark.streaming import streaming_exact_dedup
+
+    src = str(tmp_path / "docs_tie_in")
+    schema = "doc_id long, text string, part long"
+    spark.createDataFrame(
+        [(5, "same text", 2), (5, "Same  Text", 1),
+         (4, "pair", None), (4, "PAIR", 3),
+         (8, "lone", None)],
+        schema).coalesce(1).write.parquet(src)
+
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (streaming_exact_dedup(stream, tag_col="part").writeStream
+         .format("memory").queryName("dedup_tie_out")
+         .option("checkpointLocation", str(tmp_path / "ckpt_tie"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+
+    rows = {(r.doc_id, r.part) for r in spark.sql(
+        "SELECT doc_id, part FROM dedup_tie_out").collect()}
+    assert rows == {(5, 1), (4, 3), (8, None)}
